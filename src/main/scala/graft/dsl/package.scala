@@ -151,7 +151,8 @@ package object dsl {
   }
 
   implicit final class GraftIvfIndexOps(private val idx: IvfIndex) {
-    /** Batch ANN: every (qid, qvec) answered in two Spark jobs total. */
+    /** Batch ANN: every (qid, qvec) answered in one Spark job on an index
+      * that stores vectors, two on a codes-only index. */
     def annBatch(queries: Array[(Long, Array[Float])], k: Int,
                  probes: Int = 4, refine: Int = 8): DataFrame =
       idx.searchMany(queries, k, probes = probes, refine = refine)

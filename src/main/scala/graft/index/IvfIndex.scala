@@ -227,6 +227,31 @@ object IvfIndex {
     * that the shuffle join is the honest plan. */
   val rangeBroadcastCap = 10000000L
 
+  /** Distinct ids of `ids`, at most `cap + 1` of them, in ONE Spark job:
+    * each partition keeps its first `cap + 1` DISTINCT ids (its scan stops
+    * there) and the driver folds each partition's array into one set as
+    * it arrives, adding nothing past `cap + 1`. Overflow stays exact — a
+    * partition that stopped early alone holds `cap + 1` distinct ids — so
+    * `length > cap` iff the full distinct set exceeds `cap`. A plain
+    * `.limit(cap + 1).collect()` runs incremental CollectLimit rounds (two
+    * jobs for a typical sphere) and a `.distinct()` before it a shuffle.
+    * The driver holds at most `cap + 1` ids plus one partition's array. */
+  private[graft] def cappedDistinct(ids: org.apache.spark.rdd.RDD[Long], cap: Int): Array[Long] = {
+    val limit = math.min(cap.toLong + 1, Int.MaxValue).toInt
+    val local = (it: Iterator[Long]) => {
+      val seen = new scala.collection.mutable.LongMap[Unit]()
+      while (it.hasNext && seen.size < limit) seen.update(it.next(), ())
+      seen.keys.toArray
+    }
+    val merged = new scala.collection.mutable.LongMap[Unit]()
+    // the scheduler hands results over one at a time (JobWaiter synchronizes)
+    ids.sparkContext.runJob(ids, local, (_: Int, part: Array[Long]) => {
+      var i = 0
+      while (i < part.length && merged.size < limit) { merged.update(part(i), ()); i += 1 }
+    })
+    merged.keys.toArray
+  }
+
   private def spherical(cfg: IvfConfig): Boolean = cfg.metric == "cosdist"
 
   /** Encode rows to (cluster_id, id, vec, cmeta, codes) via broadcast
@@ -418,11 +443,9 @@ object IvfIndex {
                           origDim: Int): IvfIndex = {
     val spark = df.sparkSession
     val dim = centroids(0).length
-    val dbg = sys.env.contains("GRAFT_SEARCH_DEBUG")
     // internal levels first (driver-side, centroid-count work): the
     // encode pass needs them when cfg.assignByTree descends
     val (upC, upCh) = buildUpper(centroids, cfg.effectiveUpper, cfg.kmeansIters)
-    val t0 = System.nanoTime()
     val up = if (upC.nonEmpty) Some((upC, upCh)) else None
     val passes = math.min(math.max(1, cfg.buildPasses), centroids.length)
     // partitionOverwriteMode pinned STATIC on every build write: under a
@@ -455,7 +478,6 @@ object IvfIndex {
         val lo = p * per
         val hi = math.min(centroids.length, lo + per)
         if (lo < hi) {
-          val tp = System.nanoTime()
           encodeRows(df, idCol, vecCol, cfg, centroids, origDim, upper = up,
               clusterRange = Some((lo, hi)))
             .repartition(col("cluster_id"))
@@ -463,13 +485,10 @@ object IvfIndex {
             .option("partitionOverwriteMode", "static")
             .partitionBy("cluster_id").parquet(s"$dir/gen-0")
           releaseShuffleScratch(scratch0)
-          if (dbg) System.err.println(
-            s"[build] pass $p clusters [$lo,$hi): ${(System.nanoTime()-tp)/1e9}s")
         }
         p += 1
       }
     }
-    if (dbg) System.err.println(s"[build] encode+write: ${(System.nanoTime()-t0)/1e9}s")
     // SOURCE COMPLETENESS (round 17): did every source row enter the
     // index? The encode pass silently drops NULL-vector / NULL-id rows
     // (they have no home in any cell), so a bare candidate-id
@@ -489,9 +508,7 @@ object IvfIndex {
       try spark.read.parquet(s"$dir/gen-0").count()
       catch { case scala.util.control.NonFatal(_) => 0L }
     val sourceComplete = srcCount == keptCount
-    val t1 = System.nanoTime()
     writeMeta(spark, dir, dim, origDim, cfg, centroids, sourceComplete)
-    if (dbg) System.err.println(s"[build] meta: ${(System.nanoTime()-t1)/1e9}s")
     Files.createDirectories(Paths.get(dir))
     // a rebuild into a dir tainted by an earlier instance's null-bearing
     // delta append starts from this build's own fresh verdict
@@ -512,8 +529,6 @@ object IvfIndex {
     cfg.validate()
     val spark = df.sparkSession
     import spark.implicits._
-    val dbg = sys.env.contains("GRAFT_SEARCH_DEBUG")
-    val tS = System.nanoTime()
     val cap = math.max(cfg.lists * cfg.samplingFactor, cfg.lists)
     // Randomized sample, not a prefix: a limit(cap) would take the FIRST
     // cap rows, and on data sorted/clustered by time or source (every real
@@ -575,8 +590,6 @@ object IvfIndex {
     val sample =
       if (cfg.rotate) { val r = new Rotation(origDim); sampleN.map(r.apply) }
       else sampleN
-    if (dbg) System.err.println(s"[build] sample: ${(System.nanoTime()-tS)/1e9}s (${sample0.length} rows)")
-    val tK = System.nanoTime()
     val hier = cfg.kmeansAlgo == "hierarchical"
     val centroids =
       if (cfg.kmeansDim > 0)
@@ -585,7 +598,6 @@ object IvfIndex {
       else if (hier) KMeans.hierarchical(sample, cfg.lists, cfg.kmeansIters,
         spherical(cfg))
       else KMeans.lloyd(sample, cfg.lists, cfg.kmeansIters, spherical(cfg))
-    if (dbg) System.err.println(s"[build] kmeans: ${(System.nanoTime()-tK)/1e9}s")
     finishBuild(df, idCol, vecCol, dir, cfg, centroids, origDim)
   }
 
@@ -747,35 +759,29 @@ object IvfIndex {
     if (Files.exists(p))
       Files.walk(p).sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
 
+  /** Exact-distance kernel: stored vectors (normalized/rotated) against
+    * the prepped query, or — `raw`, the rerank-in-table shape — the source
+    * table's original vectors against the raw query, where cosine must
+    * renormalize. */
+  private[index] def exactKernel(metric: String, raw: Boolean)
+      : (Array[Float], Array[Float]) => Double =
+    metric match {
+      case "l2"      => K.l2
+      case "negdot"  => K.negdot
+      case "cosdist" => if (raw) K.cosdist else (v, q) => 1.0 + K.negdot(v, q)
+    }
+
   /** Executor-side strict-< cutoff kernel of [[IvfIndex.rangeSearchMany]]
-    * — a companion method so closures capture no index instance. The
-    * stored vector is already normalized/rotated; `qq` in the map is the
-    * matching prepped query. */
+    * — a companion method so closures capture no index instance. `qs`
+    * maps each qid to its query and radius: the prepped query against
+    * stored vectors, or the raw query against source vectors when `raw`
+    * (see [[exactKernel]]). */
   private[index] def cutStatic(qs: Map[Long, (Array[Float], Double)],
                                qid: Long, id: Long, v: Array[Float],
-                               metric: String): Iterator[(Long, Long, Double)] = {
-    val (qq, r) = qs(qid)
-    val d = metric match {
-      case "l2"      => K.l2(v, qq)
-      case "negdot"  => K.negdot(v, qq)
-      case "cosdist" => 1.0 + K.negdot(v, qq)
-    }
-    if (d < r) Iterator.single((qid, id, d)) else Iterator.empty
-  }
-
-  /** [[cutStatic]] against RAW source-table vectors and raw queries (the
-    * rerank-in-table shape): cosine must renormalize — the table's
-    * vectors are the user's originals, not the index's normalized
-    * store. */
-  private[index] def cutStaticRaw(qs: Map[Long, (Array[Float], Double)],
-                                  qid: Long, id: Long, v: Array[Float],
-                                  metric: String): Iterator[(Long, Long, Double)] = {
+                               metric: String, raw: Boolean = false)
+      : Iterator[(Long, Long, Double)] = {
     val (q, r) = qs(qid)
-    val d = metric match {
-      case "l2"      => K.l2(v, q)
-      case "negdot"  => K.negdot(v, q)
-      case "cosdist" => K.cosdist(v, q)
-    }
+    val d = exactKernel(metric, raw)(v, q)
     if (d < r) Iterator.single((qid, id, d)) else Iterator.empty
   }
 
@@ -1066,7 +1072,7 @@ object IvfIndex {
 
   /** One-read multi-root MULTI-SPHERE range candidates: ids whose code
     * lower bound undercuts SOME sphere's radius in that sphere's
-    * intersecting cells of ANY root (the rangeCandidateDf cutoff,
+    * intersecting cells of ANY root (the rangeCandidateRdd cutoff,
     * cos-shifted like the single-root path; a row exits at its first
     * passing sphere), capped at `cap + 1` rows so callers detect
     * overflow without an unbounded collect. One Spark job and ONE
@@ -1861,7 +1867,7 @@ object IvfIndex {
     inf
   }
 
-  /** The estFrame estimator: epsilon-scaled code lower bound in the
+  /** The estimateCandidates estimator: epsilon-scaled code lower bound in the
     * root's own metric (dot-family WITHOUT the cosdist output shift —
     * ordering-only callers match estimateCandidates; range callers
     * apply the shift at the cutoff). */
@@ -2235,8 +2241,10 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
     df.count()
   }
 
-  // Codes-only cache for the PARTIAL prewarm tier: estimate scans read it
-  // when valid; rerank still reads the (cold) vec column from disk.
+  // Codes-only cache for the PARTIAL prewarm tier: estimate-only scans
+  // (range candidates, estimateCandidates, codes-only and pure-estimate
+  // top-k) read it when valid. The fused top-k pass needs codes and
+  // vectors in one scan, so it reads dataDf (cached by prewarm()).
   @volatile private var cachedCodes: (String, Long, Long, DataFrame) = null
 
   /** Height-limited prewarm (reference `vchordrq_prewarm(height)`,
@@ -2244,7 +2252,8 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
     * pages but not the vectors): centroid levels are always
     * driver-resident here, so the partial tier caches the ESTIMATE-phase
     * columns (cluster_id, id, cmeta, codes) — a fraction of full prewarm's
-    * memory — while exact rerank keeps streaming vectors from disk. */
+    * memory — while every scan that reads vectors keeps streaming them
+    * from disk. */
   def prewarmCodes(): Long = {
     val prev = cachedCodes
     val df = dataDf.select(dataCols.filter(_ != "vec").map(col): _*)
@@ -2421,17 +2430,23 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
       .map(_._2)
   }
 
-  /** Estimate-phase frame for a prepped query over the given probed
-    * cells: LAZY (id, cluster_id, lb) rows, lb = epsilon-scaled code
-    * lower bound in metric order. Codes only — the vec column is pruned
-    * from this scan (and served from the codes cache when prewarmCodes()
-    * ran). Shared by [[search]] (which collects the top-nCand) and
-    * [[estimateCandidates]] (which returns the frame for callers that
-    * union MANY indexes' candidates into one job). */
-  private def estFrame(qq: Array[Float], probed: Array[Int],
-                       epsilon: Double): DataFrame = {
-    val perCluster = clusterPrep(qq, probed)
-    val bpc = spark.sparkContext.broadcast(perCluster)
+  /** Lazy top-`nCand` estimate candidates `(id, lb)` in (lb, id) order,
+    * lb = epsilon-scaled code lower bound in metric order, read from codes
+    * only (the codes cache when prewarmCodes() ran). The
+    * partitioned-table planner ([[graft.plans.AnnTopKRewrite]]
+    * serveMulti) unions one of these per per-root index and collects
+    * ONCE, so planning cost stays one Spark job however many children a
+    * date-partitioned corpus has; exactness then comes from the rewritten
+    * plan's own Sort+Limit over the IN-restricted scan (the same rerank
+    * the reference does in-table). `lb` rides along so callers over many
+    * roots can budget a bounded global candidate set by estimate order
+    * instead of truncating each root blindly. */
+  def estimateCandidates(q: Array[Float], nCand: Int, probes: Int = 4,
+                         epsilon: Double = 1.9, probes1: Int = -1): DataFrame = {
+    graft.eval.QueryRecorder.record(dir, q)
+    val qq = prepQuery(q)
+    val probed = probe(q, probes, probes1)
+    val bpc = spark.sparkContext.broadcast(clusterPrep(qq, probed))
     val bits = meta.cfg.bits
     val dim = meta.dim
     val isL2 = meta.cfg.metric == "l2"
@@ -2443,84 +2458,37 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
           val (qr, qSum, qNormSq, clusterDot) = pc(cid)
           // dot-family estimate inside lbOf: residual codes contribute
           // dot(q, v-c), clusterDot adds the dot(q, c) remainder
-          val lb = IvfIndex.lbOf(RaBitQ.Code(cm, codes, bits, dim), bits, dim,
-            isL2, qr, qSum, qNormSq, clusterDot, epsilon)
-          (id, cid, lb)
+          (id, IvfIndex.lbOf(RaBitQ.Code(cm, codes, bits, dim), bits, dim,
+            isL2, qr, qSum, qNormSq, clusterDot, epsilon))
         }
-      }.toDF("id", "cluster_id", "lb")
-  }
-
-  /** Lazy top-`nCand` estimate candidates `(id, lb)` — [[search]]'s
-    * estimate stage WITHOUT the collect. The partitioned-table planner
-    * ([[graft.plans.AnnTopKRewrite]] serveMulti) unions one of these per
-    * per-root index and collects ONCE, so planning cost stays one Spark
-    * job however many children a date-partitioned corpus has; exactness
-    * then comes from the rewritten plan's own Sort+Limit over the
-    * IN-restricted scan (the same rerank the reference does in-table).
-    * `lb` rides along so callers over many roots can budget a bounded
-    * global candidate set by estimate order instead of truncating each
-    * root blindly. */
-  def estimateCandidates(q: Array[Float], nCand: Int, probes: Int = 4,
-                         epsilon: Double = 1.9, probes1: Int = -1): DataFrame = {
-    graft.eval.QueryRecorder.record(dir, q)
-    val qq = prepQuery(q)
-    val probed = probe(q, probes, probes1)
-    estFrame(qq, probed, epsilon).orderBy($"lb", $"id")
-      .limit(math.max(nCand, 1)).select($"id", $"lb")
+      }.toDF("id", "lb").orderBy($"lb", $"id").limit(math.max(nCand, 1))
   }
 
   /**
    * ANN top-k. `probes` = clusters scanned; `epsilon` scales the code
    * error bound (reference default 1.9, src/index/gucs.rs:66); `refine` =
    * candidate multiplier for the exact rerank (refine*k candidates).
+   * The one-query call of [[searchMany]]'s core, so the two return the
+   * same rows: one Spark job on an index that stores vectors, two on a
+   * codes-only index (estimate, then the `rerankTable` fetch).
    * Output: (id, dist) ascending, deterministic (dist, id) ties.
    */
   def search(q: Array[Float], k: Int, probes: Int = 4, epsilon: Double = 1.9,
              refine: Int = 8,
              rerankTable: Option[(DataFrame, String, String)] = None,
-             probes1: Int = -1): DataFrame = {
-    requireRerankSource(rerankTable)
+             probes1: Int = -1): DataFrame =
+    searchOne(q, k, probes, epsilon, refine, rerankTable, probes1).toSeq.toDF("id", "dist")
+
+  /** [[search]]'s rows as an array, (id, dist) ascending — the one-query
+    * core the planner reads directly. Like [[search]] it samples the
+    * query into [[graft.eval.QueryRecorder]]; batched calls do not. */
+  private[graft] def searchOne(q: Array[Float], k: Int, probes: Int = 4,
+      epsilon: Double = 1.9, refine: Int = 8,
+      rerankTable: Option[(DataFrame, String, String)] = None,
+      probes1: Int = -1): Array[(Long, Double)] = {
     graft.eval.QueryRecorder.record(dir, q)
-    val qq = prepQuery(q)
-    val probed = probe(q, probes, probes1)
-    val data = dataDf.filter(col("cluster_id").isin(probed.map(Integer.valueOf): _*))
-    val nCand = math.max(k * refine, k)
-    val cand = estFrame(qq, probed, epsilon).orderBy($"lb", $"id").limit(nCand)
-      .select($"id").as[Long].collect()
-    ensureInPushdown(cand.length)
-    rerankTable match {
-      case None =>
-        // rerank-in-index (reference RerankMethod::Index): exact distances
-        // for just the candidates — vec column read only here, with id +
-        // partition filters pushed to Parquet
-        val exact = exactDistCol(qq)
-        // per-id min BEFORE the top-k — but ONLY when a delta area
-        // exists: an id living in both gen and delta
-        // (append-without-delete) has two physical rows here, and
-        // without the fold one id could occupy two of the k slots, one
-        // at the stale vector's distance. A generation alone holds one
-        // row per id (build contract), and the fold's exchange costs a
-        // whole extra stage, measured ~0.1-0.2 s on every delta-free
-        // serve — so delta-free indexes keep the two-stage plan.
-        val scoredRows = data
-          .filter(col("id").isin(cand.map(java.lang.Long.valueOf): _*))
-          .select($"id", exact($"vec").as("dist"))
-        val folded =
-          if (deltaExists)
-            scoredRows.groupBy($"id")
-              .agg(org.apache.spark.sql.functions.min($"dist").as("dist"))
-          else scoredRows
-        folded.orderBy($"dist", $"id").limit(k)
-      case Some((src, idCol, vecCol)) =>
-        // rerank-in-table (reference rerank_heap / rerank_in_table=true,
-        // crates/vchordrq/src/rerank.rs:111+): fetch ORIGINAL vectors from
-        // the source table by row key; smaller index, one extra fetch
-        val exact = rawDistCol(q)
-        src.filter(col(idCol).isin(cand.map(java.lang.Long.valueOf): _*))
-          .select(col(idCol).cast("long").as("id"), exact(col(vecCol)).as("dist"))
-          .orderBy(col("dist"), col("id"))
-          .limit(k)
-    }
+    searchRows(Array(0L -> q), k, probes, epsilon, refine, rerankTable, probes1)
+      .map(r => (r._2, r._3))
   }
 
   /** Per-cell radius: max stored-space L2 distance from a member to its
@@ -2620,51 +2588,45 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
     }
   }
 
-  /** Estimate-phase survivors of the radius cutoff as a LAZY single-column
-    * (`id`) frame: ids whose epsilon-scaled code lower bound undercuts
-    * `radius` (same bound `search` trusts), read from codes only — the vec
-    * column is never touched. Never materialized on the driver here;
-    * callers either take a bounded `.limit(...).collect()` probe or join
-    * it distributed. */
-  private def rangeCandidateDf(center: Array[Float], radius: Double,
-                               epsilon: Double): Dataset[Long] = {
-    val qq = prepQuery(center)
-    val probed = rangeCells(qq, radius)
-    if (probed.isEmpty) return spark.emptyDataset[Long]
-    val perCluster = clusterPrep(qq, probed)
-    val bpc = spark.sparkContext.broadcast(perCluster)
+  /** Estimate-phase survivors of the radius cutoff over the probed cells
+    * (`qq` the PREPPED center), LAZY: ids whose epsilon-scaled code lower
+    * bound undercuts `radius` (same bound `search` trusts), read from
+    * codes only through InternalRow accessors — the vec column is never
+    * touched. Never materialized on the driver here; callers either take
+    * the capped collect of [[rangeCandidateIds]] or join it distributed. */
+  private def rangeCandidateRdd(qq: Array[Float], probed: Array[Int], radius: Double,
+                                epsilon: Double): org.apache.spark.rdd.RDD[Long] = {
+    val bpc = spark.sparkContext.broadcast(clusterPrep(qq, probed))
     val bits = meta.cfg.bits
     val dim = meta.dim
     val metric = meta.cfg.metric
-    val rad = radius
-    codesDf.filter(col("cluster_id").isin(probed.map(Integer.valueOf): _*))
-      .as[(Int, Long, Array[Float], Array[Byte])]
+    org.apache.spark.sql.graft.ColumnBridge
+      .toInternalRdd(codesDf.filter(col("cluster_id").isin(probed.map(Integer.valueOf): _*))
+        .select("cluster_id", "id", "cmeta", "codes"))
       .mapPartitions { it =>
         val pc = bpc.value
-        it.flatMap { case (cid, id, cm, codes) =>
-          val (qr, qSum, qNormSq, clusterDot) = pc(cid)
-          val lb0 = IvfIndex.lbOf(RaBitQ.Code(cm, codes, bits, dim), bits, dim,
+        it.flatMap { row =>
+          val (qr, qSum, qNormSq, clusterDot) = pc(row.getInt(0))
+          val code = RaBitQ.Code(row.getArray(2).toFloatArray(), row.getBinary(3), bits, dim)
+          val lb0 = IvfIndex.lbOf(code, bits, dim,
             metric == "l2", qr, qSum, qNormSq, clusterDot, epsilon)
           val lb = if (metric == "cosdist") 1.0 + lb0 else lb0
-          if (lb < rad) Iterator.single(id) else Iterator.empty
+          if (lb < radius) Iterator.single(row.getLong(1)) else Iterator.empty
         }
       }
   }
 
-  /** Bounded driver probe of [[rangeCandidateDf]]: at most `cap + 1` ids
-    * (CollectLimit's incremental jobs stop early), so callers can detect
-    * overflow without materializing an unbounded driver set. */
+  /** Range candidates of one sphere in ONE Spark job: distinct ids, at
+    * most `cap + 1` of them, so callers detect overflow as
+    * `length > cap` without an unbounded driver set (see
+    * [[IvfIndex.cappedDistinct]]). */
   private[graft] def rangeCandidateIds(center: Array[Float], radius: Double,
-                                       epsilon: Double, cap: Int): Array[Long] =
-    rangeCandidateFrame(center, radius, epsilon, cap).collect()
-
-  /** LAZY capped range-candidate frame — [[rangeCandidateIds]] without the
-    * collect, for callers that union MANY per-root indexes' candidates
-    * into one planning job (AnnTopKRewrite.serveRange over a partitioned
-    * table). cap+1 rows lets the caller detect overflow. */
-  private[graft] def rangeCandidateFrame(center: Array[Float], radius: Double,
-                                         epsilon: Double, cap: Int): Dataset[Long] =
-    rangeCandidateDf(center, radius, epsilon).limit(cap + 1)
+                                       epsilon: Double, cap: Int): Array[Long] = {
+    val qq = prepQuery(center)
+    val probed = rangeCells(qq, radius)
+    if (probed.isEmpty) Array.empty
+    else IvfIndex.cappedDistinct(rangeCandidateRdd(qq, probed, radius, epsilon), cap)
+  }
 
   /** Batched [[rangeCandidateIds]]: the UNION of every sphere's
     * estimate-phase survivors in ONE Spark job — a single codes pass over
@@ -2695,13 +2657,15 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
         .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     val bPreps = spark.sparkContext.broadcast(preps)
     val bByCell = spark.sparkContext.broadcast(byCell)
-    codesDf.filter(col("cluster_id").isin(allCells.map(Integer.valueOf): _*))
-      .as[(Int, Long, Array[Float], Array[Byte])]
+    val cand = org.apache.spark.sql.graft.ColumnBridge
+      .toInternalRdd(codesDf.filter(col("cluster_id").isin(allCells.map(Integer.valueOf): _*))
+        .select("cluster_id", "id", "cmeta", "codes"))
       .mapPartitions { it =>
         val preps = bPreps.value
         val byCell = bByCell.value
-        it.flatMap { case (cid, id, cm, codes) =>
-          val code = RaBitQ.Code(cm, codes, bits, dim)
+        it.flatMap { row =>
+          val cid = row.getInt(0)
+          val code = RaBitQ.Code(row.getArray(2).toFloatArray(), row.getBinary(3), bits, dim)
           val qis = byCell.getOrElse(cid, Array.empty[Int])
           var hit = false
           var i = 0
@@ -2714,9 +2678,10 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
             if (lb < r) hit = true
             i += 1
           }
-          if (hit) Iterator.single(id) else Iterator.empty
+          if (hit) Iterator.single(row.getLong(1)) else Iterator.empty
         }
-      }.distinct().limit(cap + 1).collect()
+      }
+    IvfIndex.cappedDistinct(cand, cap)
   }
 
   /**
@@ -2765,7 +2730,8 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
       // so an id present in both gen and delta would appear twice and the
       // join would MULTIPLY result rows (2x2) — the IN shape filters and
       // never multiplies; distinct keeps the two shapes cardinality-equal
-      val candDf0 = rangeCandidateDf(center, radius, epsilon).toDF("id").distinct()
+      val candDf0 = rangeCandidateRdd(qq, rangeCells(qq, radius), radius, epsilon)
+        .toDF("id").distinct()
       // Join shape: Catalyst cannot size a mapPartitions-derived frame, so
       // it plans SortMergeJoin — which SHUFFLES the full data/source side
       // (measured at 10M x 768d: a ~30 GB sort shuffle for a 10k-id
@@ -2802,11 +2768,7 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
               .mapPartitions { it =>
                 val (q, r) = bQ.value
                 it.flatMap { case (id, v) =>
-                  val d = met match {
-                    case "l2"      => K.l2(v, q)
-                    case "negdot"  => K.negdot(v, q)
-                    case "cosdist" => K.cosdist(v, q)
-                  }
+                  val d = IvfIndex.exactKernel(met, raw = true)(v, q)
                   if (d < r) Iterator.single((id, d)) else Iterator.empty
                 }
               }.toDF("id", "dist")
@@ -2844,11 +2806,7 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
             .mapPartitions { it =>
               val (q, r) = bQ.value
               it.flatMap { case (id, v) =>
-                val d = met match {
-                  case "l2"      => K.l2(v, q)
-                  case "negdot"  => K.negdot(v, q)
-                  case "cosdist" => K.cosdist(v, q)
-                }
+                val d = IvfIndex.exactKernel(met, raw = true)(v, q)
                 if (d < r) Iterator.single((id, d)) else Iterator.empty
               }
             }.toDF("id", "dist")
@@ -2971,7 +2929,7 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
     // kernel runs zero-boxing over (qid, vec) rows. Queries are PREPPED
     // on the driver (normalize/rotate), so the closure ships only the
     // prepped map — never `meta` or its centroid arrays.
-    import IvfIndex.{cutStatic, cutStaticRaw}
+    import IvfIndex.cutStatic
     val scored = rerankTable match {
       case None =>
         val bQs = spark.sparkContext.broadcast(
@@ -3008,7 +2966,7 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
           .select(col("qid"), col("id"), col("__v")).as[(Long, Long, Array[Float])]
           .mapPartitions { it =>
             val qs = bQs.value
-            it.flatMap { case (qid, id, v) => cutStaticRaw(qs, qid, id, v, metric) }
+            it.flatMap { case (qid, id, v) => cutStatic(qs, qid, id, v, metric, raw = true) }
           }.toDF("qid", "id", "dist")
     }
     // direct-scan rows for the no-prune queries: one pass over the
@@ -3051,7 +3009,7 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
             .as[(Long, Array[Float])].mapPartitions { it =>
               val qs = bQs.value
               it.flatMap { case (id, v) =>
-                qs.keysIterator.flatMap(qid => cutStaticRaw(qs, qid, id, v, metric))
+                qs.keysIterator.flatMap(qid => cutStatic(qs, qid, id, v, metric, raw = true))
               }
             }.toDF("qid", "id", "dist")
       })
@@ -3060,33 +3018,48 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
   }
 
   /**
-   * Batch ANN: all `queries` served by TWO Spark jobs total, independent
-   * of batch size — the throughput shape Spark is built for (the
-   * single-query `search` pays per-job scheduling that dominates at low
-   * latency; BASELINE.md: the Spark engine targets batch KNN-join
-   * queries/sec, not point-query latency).
+   * Batch ANN: all `queries` served by ONE Spark job on an index that
+   * stores vectors, independent of batch size — the throughput shape
+   * Spark is built for (BASELINE.md: the Spark engine targets batch
+   * KNN-join queries/sec); [[search]] is its one-query call.
    *
-   *   job 1: one pass over the union of all probed clusters; each
-   *          partition keeps a bounded per-query heap of code-estimate
-   *          lower bounds (map-side top-nCand), then a window takes the
-   *          global nCand per query
-   *   job 2: exact rerank of each query's candidates (vec column read
-   *          only for candidate rows), window takes top k
+   * One InternalRow pass over the union of all probed clusters: each
+   * partition keeps a bounded per-query heap on the code-estimate lower
+   * bound (lb, id) and computes the exact distance — `vec` read in the
+   * same scan — only for rows the heap admits, the reference's pipelined
+   * rerank that fetches exact vectors lazily for the rows its estimate
+   * heap keeps (crates/vchordrq/src/rerank.rs). The driver merges to the
+   * global top-nCand per query by (lb, id), folds per id and takes the
+   * top k by (dist, id). A codes-only index (or an explicit
+   * `rerankTable`) runs the same estimate pass, then a second job that
+   * fetches the candidates' ORIGINAL vectors from the source table.
    *
-   * Same estimator, bounds, and (dist, id) tie-breaks as `search` — for
-   * a single query the two return identical rows.
+   * With a delta area an id can be stored twice (gen + delta,
+   * append-without-delete): it folds to its best distance among the
+   * POOLED rows, i.e. those of its rows that made the top-nCand.
    * Output: (qid, id, dist, rn).
    */
   def searchMany(queries: Array[(Long, Array[Float])], k: Int, probes: Int = 4,
                  epsilon: Double = 1.9, refine: Int = 8,
                  rerankTable: Option[(DataFrame, String, String)] = None,
-                 probes1: Int = -1, exactBudget: Int = -1): DataFrame = {
+                 probes1: Int = -1, exactBudget: Int = -1): DataFrame =
+    searchRows(queries, k, probes, epsilon, refine, rerankTable, probes1, exactBudget)
+      .toSeq.toDF("qid", "id", "dist", "rn")
+
+  /** [[searchMany]]'s rows as an array, (qid, id, dist, rn) ascending
+    * per query — the core the planner reads directly, without planning a
+    * DataFrame just to collect its ids. */
+  private[graft] def searchRows(queries: Array[(Long, Array[Float])], k: Int,
+      probes: Int = 4, epsilon: Double = 1.9, refine: Int = 8,
+      rerankTable: Option[(DataFrame, String, String)] = None,
+      probes1: Int = -1, exactBudget: Int = -1): Array[(Long, Long, Double, Long)] = {
     require(queries.nonEmpty, "empty query batch")
     require(queries.map(_._1).distinct.length == queries.length,
       "duplicate qids in query batch — results would silently merge")
     // exactBudget == 0 is pure-estimate output (maxsim_refine = 0): no
     // exact phase runs, so a codes-only index serves it without a source
     if (exactBudget != 0) requireRerankSource(rerankTable)
+    if (k <= 0) return Array.empty
     // exactBudget >= 0 switches to the reference's per-query refine budget
     // (maxsim_refine, src/index/vchordrq/scanners/maxsim.rs:99-260): the
     // output set is the top-k BY ESTIMATE, of which only the first
@@ -3095,12 +3068,16 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
     // should pass epsilon = 0 so the estimate carries no lower-bound slack.
     val budgeted = exactBudget >= 0
     val nCand = if (budgeted) k else math.max(k * refine, k)
-    val residual = meta.cfg.residual
+    val nExact = if (budgeted) math.min(exactBudget, nCand) else nCand
+    // fused: the index's own vectors score admitted rows inside the pass
+    val fused = nExact > 0 && rerankTable.isEmpty
     val isL2 = meta.cfg.metric == "l2"
+    val metric = meta.cfg.metric
+    val f16 = meta.cfg.storage == "f16"
     val bits = meta.cfg.bits
     val dim = meta.dim
-    // per-query prep (driver): probed clusters + per-cluster query
-    // residual/sums — the same precompute `search` does for one query
+    // per-query prep (driver): prepped query, probed clusters, and the
+    // per-cluster query residual/sums
     val preps: Array[(Long, Array[Float], Map[Int, (Array[Float], Double, Double, Double)])] =
       queries.map { case (qid, q) =>
         val qq = prepQuery(q)
@@ -3125,24 +3102,31 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
       }
     }
     val clusterToQ: Array[Array[Int]] = c2qBuf.map(_.toArray)
-    val allProbed = clusterToQ.indices.filter(clusterToQ(_).nonEmpty).toArray
-    val bPrep = spark.sparkContext.broadcast(preps)
+    val allProbed = clusterToQ.indices.filter(clusterToQ(_).nonEmpty)
+      .map(Integer.valueOf).toArray
     val bTabs = spark.sparkContext.broadcast((qrTab, qSumTab, qNormSqTab, cDotTab))
     val bC2Q = spark.sparkContext.broadcast(clusterToQ)
-    val data = dataDf.filter(col("cluster_id").isin(allProbed.map(Integer.valueOf): _*))
+    val bQ = spark.sparkContext.broadcast(if (fused) preps.map(_._2) else Array.empty[Array[Float]])
+    val codeCols = Seq("cluster_id", "id", "cmeta", "codes")
+    // the fused pass reads vec too (full prewarm() serves it from memory);
+    // estimate-only passes read the codes cache when prewarmCodes() ran
+    val scan =
+      if (fused) dataDf.filter(col("cluster_id").isin(allProbed: _*))
+        .select((codeCols :+ "vec").map(col): _*)
+      else codesDf.filter(col("cluster_id").isin(allProbed: _*))
+        .select(codeCols.map(col): _*)
     // InternalRow scan: primitive accessors, no Seq boxing — this pass
     // touches every row of every probed cluster and is the batch's hot loop
-    // (reads the codes cache when prewarmCodes() ran)
-    val estRdd = org.apache.spark.sql.graft.ColumnBridge
-      .toInternalRdd(codesDf
-        .filter(col("cluster_id").isin(allProbed.map(Integer.valueOf): _*)))
+    val estRdd = org.apache.spark.sql.graft.ColumnBridge.toInternalRdd(scan)
       .mapPartitions { it =>
-        val preps = bPrep.value
         val (qrT, qSumT, qNormSqT, cDotT) = bTabs.value
         val c2q = bC2Q.value
+        val qqs = bQ.value
+        val kern = IvfIndex.exactKernel(metric, raw = false)
         // bounded per-query primitive heaps: keep the nCand smallest
-        // (lb, id) with zero boxing in the scan loop
-        val heaps = new Array[graft.core.BoundedTopK](preps.length)
+        // (lb, id) with zero boxing in the scan loop, the exact distance
+        // riding as each kept pair's payload
+        val heaps = new Array[graft.core.BoundedTopK](nQ)
         val scratch = new Array[Float](dim)
         val bias = RaBitQ.biasOf(bits)
         val sqrtDim = math.sqrt(dim.toDouble)
@@ -3159,6 +3143,9 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
               val disU2 = cm.getFloat(0)
               val scale = RaBitQ.scaleOf(disU2, cm.getFloat(1))
               RaBitQ.unpackTo(row.getBinary(3), bits, dim, scratch)
+              // the exact vector, decoded at most once per row and only
+              // when some probing query's heap admits the row
+              var v: Array[Float] = null
               var i = 0
               while (i < qis.length) {
                 val qi = qis(i)
@@ -3176,154 +3163,109 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
                   }
                 var h = heaps(qi)
                 if (h == null) { h = new graft.core.BoundedTopK(nCand); heaps(qi) = h }
-                h.offer(lb, id)
+                if (h.admits(lb, id)) {
+                  val dist =
+                    if (!fused) Double.NaN
+                    else {
+                      if (v == null)
+                        v = if (f16) graft.core.Half.decodeBytes(row.getBinary(4))
+                            else row.getArray(4).toFloatArray()
+                      kern(v, qqs(qi))
+                    }
+                  h.offer(lb, id, dist)
+                }
                 i += 1
               }
             }
           }
         }
-        val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
+        val out = scala.collection.mutable.ArrayBuffer[(Int, Long, Double, Double)]()
         var qi = 0
-        while (qi < heaps.length) {
+        while (qi < nQ) {
           val h = heaps(qi)
           if (h != null) {
-            val qid = preps(qi)._1
-            h.foreachPair((lb, id) => out += ((qid, id, lb)))
+            val q = qi
+            h.foreachEntry((lb, id, dist) => out += ((q, id, lb, dist)))
           }
           qi += 1
         }
         out.iterator
       }
-    val dbg = sys.env.contains("GRAFT_SEARCH_DEBUG")
-    val tEst0 = System.nanoTime()
-    // per-query top-nCand fold (job 1) — r18: the RDD heap fold replaces
-    // the former toDF + row_number window + collect, whose per-call
-    // Catalyst planning and codegen dominated the sliced KNN-join's
-    // driver gaps (JobProfile: ~0.1 s planning + a second exchange job
-    // per slice). Same shape as multiEstimatePools: partition-local
-    // heaps already bound emissions to nCand per (partition, query), so
-    // a narrow scan collects directly; a wide scan merges heaps per qid
+    // per-query global top-nCand by (lb, id). Partition-local heaps
+    // already bound emissions to nCand per (partition, query), so a
+    // narrow scan collects directly; a wide scan merges heaps per query
     // on executors first (exact and identically tie-ordered — the
-    // (lb, id) order is total, so merge order is irrelevant). Sorting
-    // by (lb, id) and ranking 1..nCand reproduces the window's
-    // row_number exactly.
+    // (lb, id) order is total, so merge order is irrelevant).
     val directMax = scala.util.Try(
         spark.conf.get("graft.ann.flat.directCollectMax").toLong)
       .getOrElse(IvfIndex.directPoolCollectMax)
     val directBound = estRdd.getNumPartitions.toLong * nQ * nCand
-    val topPairs: Array[(Long, Array[(Double, Long)])] =
-      if (directBound <= directMax)
-        estRdd.collect().groupBy(_._1).iterator.map { case (qid, rows) =>
-          qid -> rows.map(r => (r._3, r._2))
-            .sortBy(identity)(Ordering.Tuple2[Double, Long]).take(nCand)
-        }.toArray
-      else {
+    val heaps: Array[(Int, graft.core.BoundedTopK)] =
+      if (directBound <= directMax) {
+        val hs = scala.collection.mutable.HashMap[Int, graft.core.BoundedTopK]()
+        estRdd.collect().foreach { case (qi, id, lb, dist) =>
+          hs.getOrElseUpdate(qi, new graft.core.BoundedTopK(nCand)).offer(lb, id, dist)
+        }
+        hs.toArray
+      } else {
         val reducers = math.max(1, math.min(nQ,
           spark.sparkContext.defaultParallelism))
-        estRdd.map { case (qid, id, lb) => (qid, (lb, id)) }
+        estRdd.map { case (qi, id, lb, dist) => (qi, (lb, id, dist)) }
           .aggregateByKey(new graft.core.BoundedTopK(nCand), reducers)(
-            (h, t) => { h.offer(t._1, t._2); h },
+            (h, t) => { h.offer(t._1, t._2, t._3); h },
             (a, b) => a.mergeFrom(b))
           .collect()
-          .map { case (qid, h) => qid -> h.sorted() }
       }
-    val candRows: Array[(Long, Long, Int, Double)] =
-      topPairs.flatMap { case (qid, arr) =>
-        arr.iterator.zipWithIndex.map { case ((lb, id), i) =>
-          (qid, id, i + 1, lb)
-        }
+    val pooled: Array[(Int, Array[(Double, Long, Double)])] =
+      heaps.sortBy(_._1).map { case (qi, h) => qi -> h.sortedEntries() }
+    val byLb = Ordering.Tuple2[Double, Long]
+    def ranked(qid: Long, rows: Iterable[(Double, Long)]): Iterator[(Long, Long, Double, Long)] =
+      rows.iterator.zipWithIndex.map { case ((d, id), i) => (qid, id, d, (i + 1).toLong) }
+    // pure-estimate output (maxsim_refine = 0): the (lb, id) order as is
+    if (nExact == 0)
+      return pooled.flatMap { case (qi, rs) =>
+        ranked(preps(qi)._1, rs.take(k).map(r => (r._1, r._2)))
       }
-    if (dbg) System.err.println(s"[searchMany] est+fold+collect: ${(System.nanoTime()-tEst0)/1e9}s, pairs=${candRows.length}")
-    if (candRows.isEmpty)
-      return Seq.empty[(Long, Long, Double, Long)].toDF("qid", "id", "dist", "rn")
-    // budgeted mode: only the first exactBudget candidates per query (in
-    // estimate order) are re-scored exactly; the rest keep the estimate
-    val exactPairs =
-      if (budgeted) candRows.filter(_._3 <= exactBudget).map(r => (r._1, r._2))
-      else candRows.map(r => (r._1, r._2))
-    val roughRows: Array[(Long, Long, Double)] =
-      if (budgeted) candRows.filter(_._3 > exactBudget).map(r => (r._1, r._2, r._4))
-      else Array.empty
-    if (exactPairs.isEmpty) {
-      // pure-estimate output (maxsim_refine = 0)
-      val out = roughRows.groupBy(_._1).toSeq.flatMap { case (qid, rows) =>
-        rows.map(r => (r._3, r._2)).sorted.take(k).zipWithIndex
-          .map { case ((d, id), i) => (qid, id, d, (i + 1).toLong) }
-      }
-      return out.toDF("qid", "id", "dist", "rn")
-    }
-    val candPairs = exactPairs
-    // rerank (job 2): InternalRow scan of the probed clusters; candidate
-    // membership via a sorted-id binary search (no giant In list, no join
-    // machinery); scored pairs (B x nCand at most) merge on the driver
-    val tRr = System.nanoTime()
-    val qidToQi = preps.zipWithIndex.map { case ((qid, _, _), qi) => qid -> qi }.toMap
-    val idToQi = new java.util.HashMap[java.lang.Long, Array[Int]]()
-    candPairs.groupBy(_._2).foreach { case (id, qs) =>
-      idToQi.put(id, qs.map(p => qidToQi(p._1)))
-    }
-    val sortedIds = candPairs.map(_._2).distinct.sorted
-    val bI2Q = spark.sparkContext.broadcast(idToQi)
-    val bSorted = spark.sparkContext.broadcast(sortedIds)
-    val bQ = spark.sparkContext.broadcast(preps.map(_._2))
-    val metric = meta.cfg.metric
-    val f16 = meta.cfg.storage == "f16"
-    val scored: Array[(Long, Long, Double)] = rerankTable match {
-      case None =>
-        org.apache.spark.sql.graft.ColumnBridge
-          .toInternalRdd(data.select($"id", $"vec"))
-          .mapPartitions { it =>
-            val sorted = bSorted.value
-            val i2q = bI2Q.value
-            val qqs = bQ.value
-            val kern: (Array[Float], Array[Float]) => Double = metric match {
-              case "l2"      => K.l2
-              case "negdot"  => K.negdot
-              case "cosdist" => (v, q) => 1.0 + K.negdot(v, q)
-            }
-            it.flatMap { row =>
-              val id = row.getLong(0)
-              if (java.util.Arrays.binarySearch(sorted, id) < 0) Iterator.empty
-              else {
-                val v =
-                  if (f16) graft.core.Half.decodeBytes(row.getBinary(1))
-                  else row.getArray(1).toFloatArray()
-                i2q.get(id).iterator.map(qi => (qi.toLong, id, kern(v, qqs(qi))))
-              }
-            }
-          }.collect().map { case (qi, id, d) => (preps(qi.toInt)._1, id, d) }
+    // exact distances of each query's first nExact candidates (estimate
+    // order); the remainder keep their estimate
+    val exact: Array[Array[(Double, Long)]] = rerankTable match {
+      case None => pooled.map(_._2.take(nExact).map(r => (r._3, r._2)))
       case Some((src, srcIdCol, srcVecCol)) =>
         // rerank-in-table (reference rerank_in_table=true): exact distances
-        // from ORIGINAL table vectors against the RAW queries — same
-        // kernels as the single-query rerankTable path, so batch == single
+        // from ORIGINAL table vectors against the RAW queries, one fetch
+        // for the whole batch; the id IN list reaches Parquet's page
+        // pruning (ensureInPushdown)
+        val pairs = pooled.flatMap { case (qi, rs) => rs.take(nExact).map(r => (r._2, qi)) }
+        val idToQi = new java.util.HashMap[java.lang.Long, Array[Int]]()
+        pairs.groupBy(_._1).foreach { case (id, qs) => idToQi.put(id, qs.map(_._2)) }
+        val ids = pairs.map(_._1).distinct.sorted
+        ensureInPushdown(ids.length)
+        val bI2Q = spark.sparkContext.broadcast(idToQi)
         val bRaw = spark.sparkContext.broadcast(queries.map(_._2))
-        val kern: (Array[Float], Array[Float]) => Double = metric match {
-          case "l2"      => K.l2
-          case "negdot"  => K.negdot
-          case "cosdist" => K.cosdist
-        }
-        src.join(broadcast(sortedIds.toSeq.toDF("__cand_id")),
-            col(srcIdCol).cast("long") === col("__cand_id"))
-          .select(col(srcIdCol).cast("long"), col(srcVecCol))
+        val scored = src
+          .filter(col(srcIdCol).isin(ids.map(java.lang.Long.valueOf): _*) &&
+            col(srcVecCol).isNotNull)
+          .select(col(srcIdCol).cast("long"), col(srcVecCol).cast("array<float>"))
           .as[(Long, Array[Float])]
-          .flatMap { case (id, v) =>
-            Option(bI2Q.value.get(id)).toSeq.flatten
-              .map(qi => (qi.toLong, id, kern(v, bRaw.value(qi))))
-          }.collect().map { case (qi, id, d) => (preps(qi.toInt)._1, id, d) }
+          .mapPartitions { it =>
+            val kern = IvfIndex.exactKernel(metric, raw = true)
+            val raw = bRaw.value
+            val i2q = bI2Q.value
+            it.flatMap { case (id, v) =>
+              Option(i2q.get(id)).iterator.flatten.map(qi => (qi, id, kern(v, raw(qi))))
+            }
+          }.collect().groupBy(_._1)
+        pooled.map { case (qi, _) =>
+          scored.getOrElse(qi, Array.empty).map(r => (r._3, r._2))
+        }
     }
-    if (dbg) System.err.println(s"[searchMany] rerank scan: ${(System.nanoTime()-tRr)/1e9}s, scored=${scored.length}")
-    // driver-side final top-k per query (at most B x nCand rows); in
-    // budgeted mode the rough remainder merges in with estimate distances
-    val out = (scored ++ roughRows).groupBy(_._1).toSeq.flatMap { case (qid, rows) =>
-      // distinct ids per query: gen+delta double rows fold to their best
-      // distance (same contract as search / searchManyMulti)
-      rows.groupBy(_._2).valuesIterator
-        .map(dups => dups.minBy(r => (r._3, r._2)))
-        .map(r => (r._3, r._2)).toSeq
-        .sorted.take(k).zipWithIndex
-        .map { case ((d, id), i) => (qid, id, d, (i + 1).toLong) }
+    // final top-k per query; distinct ids — gen+delta double rows fold to
+    // their best distance (same contract as searchManyMulti)
+    pooled.zip(exact).flatMap { case ((qi, rs), ex) =>
+      val rows = ex ++ rs.drop(nExact).map(r => (r._1, r._2))
+      ranked(preps(qi)._1, rows.groupBy(_._2).valuesIterator
+        .map(_.min(byLb)).toSeq.sorted(byLb).take(k))
     }
-    out.toDF("qid", "id", "dist", "rn")
   }
 
   /**

@@ -154,7 +154,7 @@ final class VamanaGraph(
 
   /** ε-scaled LOWER-BOUND scorer for range traversal: on a quantized
     * graph, the code estimate minus `epsilon` times the RaBitQ per-code
-    * error bound (the IvfIndex estFrame rule — a vertex is a range
+    * error bound (the IvfIndex lbOf rule — a vertex is a range
     * CANDIDATE when its lower bound is inside the sphere; the exact
     * rerank applies the strict cutoff). Exact graphs score exactly;
     * epsilon = 0 degrades to the plain estimate. */

@@ -180,9 +180,9 @@ object MaxSim {
     val spark = idx.spark
     import spark.implicits._
     // ALL tokens retrieve through ONE batch call (qid = token index):
-    // searchMany is bit-equal to per-token `search` but costs 2 Spark jobs
-    // total instead of 2 per token — a 100-token ColBERT query would
-    // otherwise serialize 200 driver-scheduled jobs. With a per-token
+    // searchMany is bit-equal to per-token `search` but costs ONE Spark
+    // job total instead of one per token — a 100-token ColBERT query would
+    // otherwise serialize 100 driver-scheduled jobs. With a per-token
     // budget the batch runs in mixed exact/estimate mode (epsilon = 0 so
     // the estimate stand-ins carry no lower-bound slack).
     val tokQueries = query.zipWithIndex.map { case (q, i) => (i.toLong, q) }

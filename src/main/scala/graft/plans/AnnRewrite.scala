@@ -788,24 +788,19 @@ object AnnTopKRewrite {
     try body finally inPlanning.set(prev)
   }
 
-  /** The candidate-id restriction over `ids`: a literal In( ) chain up
-    * to Spark's own OptimizeIn threshold, an InSet past it. This rule
-    * runs in extraOptimizations — AFTER the main optimizer batches — so
-    * OptimizeIn never revisits the Filter it emits; at thousands of ids
-    * a raw In chain blows Janino's 64KB method limit, whole-stage
-    * codegen falls back to interpreted evaluation, and the restricted
-    * scan ran ~10x SLOWER than the exact scan it replaced (measured at
-    * 1280 ids on a 16-root partitioned serve). Parquet pushdown
-    * translates both forms to the same sources.In filter. */
+  /** The candidate-id restriction over `ids`: an InSet at every size.
+    * This rule runs in extraOptimizations — AFTER the main optimizer
+    * batches — so OptimizeIn never revisits the Filter it emits. A
+    * literal In chain inlines every id into the whole-stage code: each
+    * query compiled fresh code, and at thousands of ids the chain blew
+    * Janino's 64KB method limit (interpreted fallback, ~10x slower at
+    * 1280 ids on a 16-root partitioned serve). InSet over a Long column
+    * reads its value set through a reference object, so the generated
+    * code is the same for every query and compiles once. Parquet pushdown
+    * translates InSet to the same sources.In filter. */
   private[graft] def idsInExpr(attr: Expression, ids: Seq[Long],
-                               idLit: Long => Literal): Expression = {
-    val thresh = org.apache.spark.sql.internal.SQLConf.get
-      .optimizerInSetConversionThreshold
-    if (ids.length > thresh)
-      InSet(attr, ids.iterator.map(id => idLit(id).value).toSet)
-    else
-      In(attr, ids.iterator.map(idLit).toSeq)
-  }
+                               idLit: Long => Literal): Expression =
+    InSet(attr, ids.iterator.map(id => idLit(id).value).toSet)
 
   /** The TOP-K candidate restriction INCLUDING the exact plan's
     * null-ordering rows: `id IN (...) OR vec IS NULL`. Spark ascending
@@ -1017,18 +1012,34 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     f
   }
 
-  /** Supported sort children: bare relation, column-pruning Project,
-    * deterministic prefilter, or Project over prefilter. */
+  /** Supported sort children: bare relation, deterministic Project —
+    * column pruning, or computed columns such as the distance a top-k
+    * selects next to its ORDER BY (`SELECT id, vec_l2(e, q) AS dist ...
+    * ORDER BY vec_l2(e, q) LIMIT k`) — deterministic prefilter, or
+    * Project over prefilter. A deterministic projection maps each row on
+    * its own, so restricting its input rows to the candidates restricts
+    * its output the same way. The routes find the vector and id columns
+    * BY NAME in the child's output, so a computed column may not reuse a
+    * relation column's name: `withColumn("vec", normalize(vec))` or
+    * `SELECT id + 1 AS id` would otherwise be served from the index on
+    * the raw column. */
   private def destructure(plan: LogicalPlan)
-      : Option[(LogicalRelation, Option[Expression])] = plan match {
-    case r: LogicalRelation => Some((r, None))
-    case Project(pl, r: LogicalRelation)
-        if pl.forall(_.isInstanceOf[AttributeReference]) => Some((r, None))
-    case Filter(pred, r: LogicalRelation) if pred.deterministic => Some((r, Some(pred)))
-    case Project(pl, Filter(pred, r: LogicalRelation))
-        if pl.forall(_.isInstanceOf[AttributeReference]) && pred.deterministic =>
-      Some((r, Some(pred)))
-    case _ => None
+      : Option[(LogicalRelation, Option[Expression])] = {
+    def admits(pl: Seq[NamedExpression], r: LogicalRelation): Boolean =
+      pl.forall {
+        case _: AttributeReference => true
+        case e => e.deterministic &&
+          !r.output.exists(_.name.equalsIgnoreCase(e.name))
+      }
+    plan match {
+      case r: LogicalRelation => Some((r, None))
+      case Project(pl, r: LogicalRelation) if admits(pl, r) => Some((r, None))
+      case Filter(pred, r: LogicalRelation) if pred.deterministic => Some((r, Some(pred)))
+      case Project(pl, Filter(pred, r: LogicalRelation))
+          if admits(pl, r) && pred.deterministic =>
+        Some((r, Some(pred)))
+      case _ => None
+    }
   }
 
   /** Limit body: the Sort itself, or a deterministic Project over it.
@@ -1897,15 +1908,15 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
               val probes = idxs.map(ix =>
                 math.min(ix.meta.cfg.lists,
                   probesFor(ix.meta.cfg.lists) * probeScale)).max
-              val df =
+              val pairs =
                 if (idxs.length == 1)
-                  idxs.head.searchMany(queries, nCand, probes = probes,
-                    refine = 1, rerankTable = rtOf)
+                  idxs.head.searchRows(queries, nCand, probes = probes,
+                    refine = 1, rerankTable = rtOf).map(r => (r._1, r._2))
                 else
                   IvfIndex.searchManyMulti(idxs, queries, nCand,
                     probes = probes, refine = 1)
-              Some(df.select("qid", "id").as[(Long, Long)].collect()
-                .groupBy(_._1).view.mapValues(_.map(_._2)).toMap)
+                    .select("qid", "id").as[(Long, Long)].collect()
+              Some(pairs.groupBy(_._1).view.mapValues(_.map(_._2)).toMap)
             }
           }
           predOpt match {
@@ -1919,9 +1930,8 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
                 val probes = idxs.map(ix => probesFor(ix.meta.cfg.lists)).max
                 Some(
                   if (idxs.length == 1)
-                    idxs.head.searchMany(queries, k, probes = probes,
-                        refine = refine, rerankTable = rtOf)
-                      .select("id").as[Long].collect()
+                    idxs.head.searchRows(queries, k, probes = probes,
+                        refine = refine, rerankTable = rtOf).map(_._2)
                   else
                     IvfIndex.searchManyMulti(idxs, queries, k, probes = probes,
                         refine = refine)
@@ -2190,17 +2200,18 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         // overflow detection itself bounded — a sphere covering most of a
         // 500-child corpus stops after maxInList+1 ids instead of
         // materializing every root's pool. A single root keeps the
-        // cache-aware per-index frame.
+        // cache-aware per-index read (partition-local capped distinct ids,
+        // one job, no CollectLimit rounds).
         AnnTopKRewrite.planningJobs.incrementAndGet()
         val raw =
           if (es.length == 1)
             AnnCatalog.index(spark, es.head)
-              .rangeCandidateFrame(cv.toFloatArray(), radius, eps, maxInList)
-              .collect()
+              .rangeCandidateIds(cv.toFloatArray(), radius, eps, maxInList)
           else
             IvfIndex.multiRangeCandidateIds(es.map(AnnCatalog.index(spark, _)),
               Array((cv.toFloatArray(), radius)), eps, maxInList)
-        // overflow check BEFORE dedup: a truncated-then-deduped list could
+        // overflow check BEFORE dedup (the multi-root rows may carry
+        // gen+delta duplicates): a truncated-then-deduped list could
         // sneak under the cap while silently missing candidates past the
         // limit — serving it would drop qualifying rows.
         // DECISION (round 12, deliberate): overflow DECLINES to the exact
@@ -2217,9 +2228,10 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         else if (all.isEmpty) Some(LocalRelation(f.output))
         else {
           ensureInPushdown(all.length)
-          Some(stamped(Filter(And(f.condition,
-            AnnTopKRewrite.idsInExpr(idAttr, all, idLit)),
-            f.child)))
+          // the id test first: FilterExec evaluates conjuncts in order, so
+          // the distance kernel then runs only for candidate rows
+          Some(stamped(Filter(And(AnnTopKRewrite.idsInExpr(idAttr, all, idLit),
+            f.condition), f.child)))
         }
       }
     } yield served
@@ -2730,8 +2742,8 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
             // cluster dirs (no per-root union branches — see unionPool)
             val raw =
               if (idxs.length == 1)
-                idxs.head._2.rangeCandidateFrame(sphCv.toFloatArray(),
-                  sphRadius, eps, maxInList).collect()
+                idxs.head._2.rangeCandidateIds(sphCv.toFloatArray(),
+                  sphRadius, eps, maxInList)
               else
                 IvfIndex.multiRangeCandidateIds(idxs.map(_._2),
                   Array((sphCv.toFloatArray(), sphRadius)), eps, maxInList)
@@ -2749,9 +2761,9 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
               ensureInPushdown(ids.length)
               val inExpr = AnnTopKRewrite.idsInExpr(idAttr, ids, idLit)
               val newChild = child match {
-                case Filter(p, rel0)              => stamped(Filter(And(p, inExpr), rel0))
+                case Filter(p, rel0)              => stamped(Filter(And(inExpr, p), rel0))
                 case Project(pl, Filter(p, rel0)) =>
-                  Project(pl, stamped(Filter(And(p, inExpr), rel0)))
+                  Project(pl, stamped(Filter(And(inExpr, p), rel0)))
                 case other                        => stamped(Filter(inExpr, other))
               }
               val sorted = Sort(sort.order, global = true, newChild)
@@ -2787,7 +2799,6 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       return None
 
     val qArr = qv.toFloatArray()
-    import spark.implicits._
     // codes-only index: candidate pools rerank against the SOURCE table
     // (the reference's rerank_in_table pairing); a full index keeps the
     // cheaper in-index rerank. Exactness of the final output is the
@@ -2804,15 +2815,16 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       GlobalLimit(Literal(k), LocalLimit(Literal(k), body))
     }
 
-    // merge the IN into the EXISTING Filter node (sphere prefilter path):
-    // the inner Filter is stamped, so the standalone range-filter case
-    // cannot re-serve a plan this rewrite produced
+    // merge the IN into the EXISTING Filter node (sphere prefilter path),
+    // ahead of the user predicate as in serveRange: the inner Filter is
+    // stamped, so the standalone range-filter case cannot re-serve a plan
+    // this rewrite produced
     def planWithMerged(ids: Array[Long]): LogicalPlan = {
       ensureInPushdown(ids.length)
       val inExpr = AnnTopKRewrite.idsInExpr(idAttr, ids, idLit)
       val newChild = child match {
-        case Filter(p, r)              => stamped(Filter(And(p, inExpr), r))
-        case Project(pl, Filter(p, r)) => Project(pl, stamped(Filter(And(p, inExpr), r)))
+        case Filter(p, r)              => stamped(Filter(And(inExpr, p), r))
+        case Project(pl, Filter(p, r)) => Project(pl, stamped(Filter(And(inExpr, p), r)))
         case other                     => stamped(Filter(inExpr, other))
       }
       val sorted = Sort(sort.order, global = true, newChild)
@@ -2836,9 +2848,8 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         def poolSize(r: Int): Long = math.min(k.toLong * r, n)
         def pool(p: Int, r: Int): Array[Long] = {
           AnnTopKRewrite.planningJobs.incrementAndGet()
-          idx.search(qArr, poolSize(r).toInt, probes = p, refine = 1,
-              rerankTable = rt)
-            .select("id").as[Long].collect()
+          idx.searchOne(qArr, poolSize(r).toInt, probes = p,
+            refine = 1, rerankTable = rt).map(_._1)
         }
         if (poolSize(r) > maxInList) return Some(gl)
         var ids = pool(p, r)
@@ -2870,9 +2881,8 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
     predOpt match {
       case None =>
-        val ids = idx.search(qArr, k, probes = probes0, refine = refine0,
-            rerankTable = rt)
-          .select("id").as[Long].collect()
+        val ids = idx.searchOne(qArr, k, probes = probes0,
+          refine = refine0, rerankTable = rt).map(_._1)
         if (ids.isEmpty) Some(gl) else Some(planWith(ids))
       // sphere prefilter in the INDEX METRIC (reference opclass strategy 2
       // WITH an accompanying order-by, pushdown_range.slt): the range

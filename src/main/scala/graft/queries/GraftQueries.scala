@@ -2565,7 +2565,7 @@ object GraftQueries {
         topkOut(variantIvf(s, d, "del").search(q, 10, probes = 16, refine = 16)) },
       Some(knnOracleWhere("vec_id % 7 <> 0"))),
 
-    // batch ANN (searchMany): B queries in two Spark jobs; per-query
+    // batch ANN (searchMany): B queries in one Spark job; per-query
     // results must equal the single-query path (and the exact oracle).
     "ivf_knn_batch" -> Q(
       (s, d) => {

@@ -227,7 +227,7 @@ object ScaleProbe {
         cScan().count()
         timed(s"_scale_rangec_scan_$n$dimTag") { cScan().count() }
       }
-      // batch serving: nBatch queries in two jobs via searchMany vs the
+      // batch serving: nBatch queries in one job via searchMany vs the
       // brute partition-local-heap knnJoin — per-query job overhead
       // amortizes, which is where the index pays off in a batch engine
       val nBatch = 256

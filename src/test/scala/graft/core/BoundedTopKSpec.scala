@@ -66,4 +66,29 @@ class BoundedTopKSpec extends AnyFunSuite {
     back.offer(0.1, 1L) // still usable after the round-trip
     assert(back.sorted().head == ((0.1, 1L)))
   }
+
+  test("payloads follow their pairs through offers, admits and merges") {
+    val rng = new scala.util.Random(17)
+    (1 to 30).foreach { trial =>
+      val k = 1 + rng.nextInt(10)
+      // distinct ids so each pair owns one payload (id * 0.5)
+      val pairs = rng.shuffle((0L until 120L).toList)
+        .map(id => (rng.nextInt(6).toDouble, id))
+      val parts = 1 + rng.nextInt(4)
+      val heaps = Array.fill(parts)(new BoundedTopK(k))
+      pairs.zipWithIndex.foreach { case ((key, id), i) =>
+        val h = heaps(i % parts)
+        // admits() is exactly "offer would keep it"
+        val before = h.sorted().toSeq
+        val adm = h.admits(key, id)
+        h.offer(key, id, id * 0.5)
+        assert(adm == (h.sorted().toSeq != before), s"trial $trial admits")
+      }
+      val merged = heaps.reduce((a, b) => a.mergeFrom(b))
+      assert(merged.sorted().toSeq == refTopK(pairs, k), s"trial $trial")
+      merged.foreachEntry((_, id, v) => assert(v == id * 0.5, s"trial $trial id $id"))
+      assert(merged.sortedEntries().toSeq ==
+        refTopK(pairs, k).map { case (key, id) => (key, id, id * 0.5) }, s"trial $trial")
+    }
+  }
 }

@@ -37,4 +37,25 @@ class QueryRecorderSpec extends SparkSpec {
       QueryRecorder.clear()
     }
   }
+
+  test("single-query search records; batched searchMany does not") {
+    import spark.implicits._
+    QueryRecorder.clear()
+    val rng = new scala.util.Random(43)
+    val rows = (0L until 200L).map(i => i -> Seq.fill(6)(rng.nextFloat()))
+    val dir = Files.createTempDirectory("graft-qrec-batch").toString
+    val idx = IvfIndex.build(rows.toDF("id", "vec"), "id", "vec", dir, IvfConfig(lists = 4))
+    QueryRecorder.enabled = true
+    QueryRecorder.rate = 1
+    try {
+      idx.searchMany((0 until 6).map(i => i.toLong -> Array.fill(6)(i * 0.1f)).toArray,
+        3, probes = 2).count()
+      assert(QueryRecorder.sampledQueries(spark).count() == 0)
+      idx.search(Array.fill(6)(0.3f), 3, probes = 2).count()
+      assert(QueryRecorder.sampledQueries(spark).count() == 1)
+    } finally {
+      QueryRecorder.enabled = false
+      QueryRecorder.clear()
+    }
+  }
 }

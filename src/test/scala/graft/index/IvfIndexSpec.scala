@@ -93,6 +93,37 @@ class IvfIndexSpec extends SparkSpec {
     assert(flatTbl == wideWant, "fallback rerank-in-table path")
   }
 
+  test("cappedDistinct detects overflow exactly; rangeSearch delegates " +
+       "exactly when the sphere's candidates pass maxInList") {
+    import spark.implicits._
+    // every id sits in two of the four partitions
+    val ids = spark.sparkContext
+      .parallelize((0L until 40L).flatMap(i => Seq(i, (i + 7) % 40)), 4)
+    Seq(40, 100).foreach { cap =>
+      assert(IvfIndex.cappedDistinct(ids, cap).sorted.toSeq == (0L until 40L), s"cap $cap")
+    }
+    Seq(1, 5, 17, 39).foreach { cap =>
+      val got = IvfIndex.cappedDistinct(ids, cap)
+      assert(got.length == cap + 1 && got.distinct.length == cap + 1 &&
+        got.forall(i => i >= 0 && i < 40), s"cap $cap: ${got.toSeq}")
+    }
+    val df = rows.toDF("id", "vec")
+    val idx = IvfIndex.build(df, "id", "vec", freshDir(), IvfConfig(lists = 16))
+    val q = Array.fill(12)(0.2f)
+    val radius = 1.6
+    val n = idx.rangeCandidateIds(q, radius, 1.9, 1 << 20).length
+    assert(n > 1, s"fixture sphere too small: $n candidates")
+    val want = rows.map { case (id, v) => (K.l2(v.toArray, q), id) }
+      .filter(_._1 < radius).sorted.map(_._2)
+    Seq(n -> 0, (n - 1) -> 1).foreach { case (maxIn, delegated) =>
+      val d0 = IvfIndex.rangeDelegations.get()
+      val got = idx.rangeSearch(q, radius, maxInList = maxIn, scanFallbackFrac = 2.0)
+        .select("id").as[Long].collect().toSeq
+      assert(IvfIndex.rangeDelegations.get() == d0 + delegated, s"maxInList $maxIn of $n")
+      assert(got == want, s"maxInList $maxIn of $n")
+    }
+  }
+
   test("rangeSearch radius <= 0 returns empty without launching estimate jobs") {
     import spark.implicits._
     val df = rows.toDF("id", "vec")

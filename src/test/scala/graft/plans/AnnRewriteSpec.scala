@@ -2016,4 +2016,77 @@ class AnnRewriteSpec extends SparkSpec {
       }
     } finally AnnCatalog.unregister(tableDir)
   }
+
+  test("top-k that also selects its distance (`SELECT id, vec_l2(...) AS " +
+       "dist ... ORDER BY vec_l2(...) LIMIT k`) is served and equals the " +
+       "exact plan, NULL-vector rows included") {
+    val (tableDir, indexDir) = nullSetup
+    AnnCatalog.register(tableDir, indexDir, "id", "vec")
+    try withRule {
+      spark.read.parquet(tableDir).createOrReplaceTempView("ann_dist_tbl")
+      GraftFunctions.registerAll(spark)
+      val q = Array.fill(8)(0.2f)
+      val qSql = q.map(_.toString).mkString("array(", "F, ", "F)")
+      val sql =
+        s"""SELECT id, vec_l2(vec, $qSql) AS dist FROM ann_dist_tbl
+           |ORDER BY vec_l2(vec, $qSql) LIMIT 10""".stripMargin
+      def rows(): Seq[(Long, Option[Double])] =
+        spark.sql(sql).collect().toSeq.map(r =>
+          (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1))))
+      withConfs("graft.ann.probes" -> "4", "graft.ann.refine" -> "20") {
+        val df = spark.sql(sql)
+        val optimized = df.queryExecution.optimizedPlan.toString
+        assert(AnnTopKRewrite.inServed(optimized), s"expected a served plan:\n$optimized")
+        assert(optimized.toLowerCase.contains("isnull"),
+          s"expected the null-ordering keep in the restriction:\n$optimized")
+        val served = rows()
+        val exact = withConfs("graft.ann.enable" -> "false")(rows())
+        // the three NULL-vector rows tie at the top (NULLS FIRST), so their
+        // mutual order is plan-dependent: compare that prefix as a set
+        assert(served.take(3).toSet == exact.take(3).toSet &&
+          served.take(3).forall(_._2.isEmpty), s"served $served exact $exact")
+        assert(served.drop(3) == exact.drop(3), s"served $served exact $exact")
+      }
+    } finally {
+      AnnCatalog.unregister(tableDir)
+      spark.catalog.dropTempView("ann_dist_tbl")
+    }
+  }
+
+  test("a computed column that reuses the vec or id name is never served " +
+       "from the index's raw column") {
+    import spark.implicits._
+    val (tableDir, indexDir) = setup
+    AnnCatalog.register(tableDir, indexDir, "id", "vec")
+    try withRule {
+      spark.read.parquet(tableDir).createOrReplaceTempView("ann_shadow_tbl")
+      GraftFunctions.registerAll(spark)
+      val q = Array.fill(8)(0.2f)
+      val qSql = q.map(_.toString).mkString("array(", "F, ", "F)")
+      val dist = GraftFunctions.vecL2(col("vec"), typedlit(q.toSeq))
+      val shapes: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+        "withColumn(vec, -vec)" -> (() => spark.read.parquet(tableDir)
+          .withColumn("vec", transform(col("vec"), x => -x))
+          .orderBy(dist).limit(10)),
+        "SELECT ... AS vec" -> (() => spark.sql(
+          s"""SELECT id, transform(vec, x -> -x) AS vec FROM ann_shadow_tbl
+             |ORDER BY vec_l2(vec, $qSql) LIMIT 10""".stripMargin)),
+        "SELECT id + 1000 AS id" -> (() => spark.sql(
+          s"""SELECT id + 1000 AS id, vec FROM ann_shadow_tbl
+             |ORDER BY vec_l2(vec, $qSql) LIMIT 10""".stripMargin)))
+      withConfs("graft.ann.probes" -> "8", "graft.ann.refine" -> "20") {
+        for ((name, df) <- shapes) {
+          val optimized = df().queryExecution.optimizedPlan.toString
+          assert(!AnnTopKRewrite.inServed(optimized), s"$name served:\n$optimized")
+          val got = df().select("id").as[Long].collect().toSeq
+          val exact = withConfs("graft.ann.enable" -> "false")(
+            df().select("id").as[Long].collect().toSeq)
+          assert(got == exact, s"$name: got $got exact $exact")
+        }
+      }
+    } finally {
+      AnnCatalog.unregister(tableDir)
+      spark.catalog.dropTempView("ann_shadow_tbl")
+    }
+  }
 }
